@@ -5713,6 +5713,185 @@ EXTENSION_QUERIES["es11_ann_recall"] = es11_ann_recall
 PQ_M, PQ_D, PQ_K = 2, 64, 16
 
 
+def _pq_assign_kernel(mats: dict, extra_err: bool):
+    """The ``mapInArrow`` kernel of ``_pq_assigned``'s assignment step:
+    ``mats`` maps subspace ``m`` to ``(cids, codebook matrix, codeword
+    norms)``; batches carry (vec_id, label, __m, __sv) and come back with
+    ``__cid`` (and ``__err`` when ``extra_err``)."""
+    import numpy as np
+
+    def _kernel(batches):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        for batch in batches:
+            n = batch.num_rows
+            if n == 0:
+                continue
+            ms = batch.column(2).to_numpy(zero_copy_only=False)
+            sv = batch.column(3)
+            lengths = pc.list_value_length(sv)
+            flat = sv.flatten()
+            vmat = None
+            uniq_lens = set(lengths.to_pylist())
+            if (
+                sv.null_count == 0
+                and flat.null_count == 0
+                and len(uniq_lens) == 1
+                and next(iter(uniq_lens)) > 0
+            ):
+                vmat = (
+                    flat.to_numpy(zero_copy_only=False)
+                    .astype(np.float64, copy=False)
+                    .reshape(n, -1)
+                )
+                if not np.isfinite(vmat).all():
+                    raise ValueError(
+                        "PQ subvector contains non-finite values"
+                    )
+            sv_rows = None if vmat is not None else sv.to_pylist()
+            out_cid = np.zeros(n, dtype=np.int64)
+            keep = np.zeros(n, dtype=bool)
+            out_err = np.full(n, np.nan) if extra_err else None
+            for m, (cids_m, cmat, cn) in mats.items():
+                rows = np.nonzero(ms == m)[0]
+                if len(rows) == 0:
+                    continue
+                keep[rows] = True
+                k, d = cmat.shape
+                if vmat is not None and vmat.shape[1] == d:
+                    vsub = vmat[rows]
+                    vn = np.zeros(len(rows), dtype=np.float64)
+                    for i in range(d):
+                        x = vsub[:, i]
+                        vn += x * x
+                    vn = np.sqrt(vn)
+                    dots = np.zeros((len(rows), k), dtype=np.float64)
+                    for i in range(d):
+                        dots += np.multiply.outer(
+                            vsub[:, i], cmat[:, i]
+                        )
+                    den = np.multiply.outer(vn, cn)
+                    valid = den != 0.0
+                    with np.errstate(
+                        divide="ignore", invalid="ignore", over="ignore"
+                    ):
+                        sims = np.where(
+                            valid, dots / np.where(valid, den, 1.0), 0.0
+                        )
+                    if not np.isfinite(sims[valid]).all():
+                        raise ValueError(
+                            "PQ sims overflowed to non-finite"
+                        )
+                    best_j = np.zeros(len(rows), dtype=np.int64)
+                    best_s = np.full(len(rows), -np.inf)
+                    has = np.zeros(len(rows), dtype=bool)
+                    for j in range(k):
+                        s = sims[:, j]
+                        v = valid[:, j]
+                        take = v & (~has | (s > best_s))
+                        best_j[take] = j
+                        best_s[take] = s[take]
+                        has |= v
+                    out_cid[rows] = cids_m[best_j]
+                    if extra_err:
+                        errs = np.zeros(
+                            (len(rows), k), dtype=np.float64
+                        )
+                        for i in range(d):
+                            dlt = np.subtract.outer(
+                                vsub[:, i], cmat[:, i]
+                            )
+                            errs += dlt * dlt
+                        out_err[rows] = errs[
+                            np.arange(len(rows)), best_j
+                        ]
+                else:
+                    # irregular batch (NULL/ragged/empty slices):
+                    # exact per-row replica of the fold — a row
+                    # whose slice length != d (zip_with null
+                    # padding) or with NULL elements has every
+                    # candidate sim NULL, so the lowest cid wins
+                    # with a NULL-poisoned error; a regular row
+                    # scores normally.
+                    import math
+
+                    if sv_rows is None:
+                        # a uniform batch whose slice length is not this
+                        # subspace's width d lands here too
+                        sv_rows = sv.to_pylist()
+                    for r in rows:
+                        v = sv_rows[r]
+                        if (
+                            v is None
+                            or len(v) != d
+                            or any(e is None for e in v)
+                        ):
+                            out_cid[r] = cids_m[0]
+                            continue
+                        vn = 0.0
+                        for e in v:
+                            e = float(e)
+                            vn += e * e
+                        vn = math.sqrt(vn)
+                        bj, bs = None, None
+                        for j in range(k):
+                            dt = 0.0
+                            for i in range(d):
+                                dt += float(v[i]) * cmat[j, i]
+                            dn = vn * cn[j]
+                            if dn == 0.0:
+                                continue
+                            s = dt / dn
+                            if bs is None:
+                                bj, bs = j, s
+                            elif math.isnan(s):
+                                if not math.isnan(bs):
+                                    bj, bs = j, s
+                            elif (not math.isnan(bs)) and s > bs:
+                                bj, bs = j, s
+                        bj = 0 if bj is None else bj
+                        out_cid[r] = cids_m[bj]
+                        if extra_err:
+                            er = 0.0
+                            for i in range(d):
+                                dlt = float(v[i]) - cmat[bj, i]
+                                er += dlt * dlt
+                            out_err[r] = er
+            arrays = [
+                batch.column(0),
+                batch.column(1),
+                batch.column(2),
+                sv,
+                pa.array(
+                    [
+                        int(c) if k_ else None
+                        for c, k_ in zip(out_cid, keep)
+                    ],
+                    type=pa.int64(),
+                ),
+            ]
+            names = ["vec_id", "label", "__m", "__sv", "__cid"]
+            if extra_err:
+                arrays.append(
+                    pa.array(
+                        [
+                            float(e) if (k_ and not np.isnan(e)) else None
+                            for e, k_ in zip(out_err, keep)
+                        ],
+                        type=pa.float64(),
+                    )
+                )
+                names.append("__err")
+            keep_idx = np.nonzero(keep)[0]
+            rb = pa.record_batch(arrays, names=names)
+            if len(keep_idx) != n:
+                rb = rb.take(pa.array(keep_idx))
+            yield rb
+
+    return _kernel
+
+
 def _pq_assigned(
     spark: SparkSession, sf: str, extra_err: bool
 ) -> tuple[DataFrame, DataFrame]:
@@ -5823,172 +6002,7 @@ def _pq_assigned(
             "__cid long"
         ) + (", __err double" if extra_err else "")
 
-        def _kernel(batches):
-            import pyarrow as pa
-            import pyarrow.compute as pc
-
-            for batch in batches:
-                n = batch.num_rows
-                if n == 0:
-                    continue
-                ms = batch.column(2).to_numpy(zero_copy_only=False)
-                sv = batch.column(3)
-                lengths = pc.list_value_length(sv)
-                flat = sv.flatten()
-                vmat = None
-                uniq_lens = set(lengths.to_pylist())
-                if (
-                    sv.null_count == 0
-                    and flat.null_count == 0
-                    and len(uniq_lens) == 1
-                    and next(iter(uniq_lens)) > 0
-                ):
-                    vmat = (
-                        flat.to_numpy(zero_copy_only=False)
-                        .astype(np.float64, copy=False)
-                        .reshape(n, -1)
-                    )
-                    if not np.isfinite(vmat).all():
-                        raise ValueError(
-                            "PQ subvector contains non-finite values"
-                        )
-                sv_rows = None if vmat is not None else sv.to_pylist()
-                out_cid = np.zeros(n, dtype=np.int64)
-                keep = np.zeros(n, dtype=bool)
-                out_err = np.full(n, np.nan) if extra_err else None
-                for m, (cids_m, cmat, cn) in mats.items():
-                    rows = np.nonzero(ms == m)[0]
-                    if len(rows) == 0:
-                        continue
-                    keep[rows] = True
-                    k, d = cmat.shape
-                    if vmat is not None and vmat.shape[1] == d:
-                        vsub = vmat[rows]
-                        vn = np.zeros(len(rows), dtype=np.float64)
-                        for i in range(d):
-                            x = vsub[:, i]
-                            vn += x * x
-                        vn = np.sqrt(vn)
-                        dots = np.zeros((len(rows), k), dtype=np.float64)
-                        for i in range(d):
-                            dots += np.multiply.outer(
-                                vsub[:, i], cmat[:, i]
-                            )
-                        den = np.multiply.outer(vn, cn)
-                        valid = den != 0.0
-                        with np.errstate(
-                            divide="ignore", invalid="ignore", over="ignore"
-                        ):
-                            sims = np.where(
-                                valid, dots / np.where(valid, den, 1.0), 0.0
-                            )
-                        if not np.isfinite(sims[valid]).all():
-                            raise ValueError(
-                                "PQ sims overflowed to non-finite"
-                            )
-                        best_j = np.zeros(len(rows), dtype=np.int64)
-                        best_s = np.full(len(rows), -np.inf)
-                        has = np.zeros(len(rows), dtype=bool)
-                        for j in range(k):
-                            s = sims[:, j]
-                            v = valid[:, j]
-                            take = v & (~has | (s > best_s))
-                            best_j[take] = j
-                            best_s[take] = s[take]
-                            has |= v
-                        out_cid[rows] = cids_m[best_j]
-                        if extra_err:
-                            errs = np.zeros(
-                                (len(rows), k), dtype=np.float64
-                            )
-                            for i in range(d):
-                                dlt = np.subtract.outer(
-                                    vsub[:, i], cmat[:, i]
-                                )
-                                errs += dlt * dlt
-                            out_err[rows] = errs[
-                                np.arange(len(rows)), best_j
-                            ]
-                    else:
-                        # irregular batch (NULL/ragged/empty slices):
-                        # exact per-row replica of the fold — a row
-                        # whose slice length != d (zip_with null
-                        # padding) or with NULL elements has every
-                        # candidate sim NULL, so the lowest cid wins
-                        # with a NULL-poisoned error; a regular row
-                        # scores normally.
-                        import math
-
-                        for r in rows:
-                            v = sv_rows[r]
-                            if (
-                                v is None
-                                or len(v) != d
-                                or any(e is None for e in v)
-                            ):
-                                out_cid[r] = cids_m[0]
-                                continue
-                            vn = 0.0
-                            for e in v:
-                                e = float(e)
-                                vn += e * e
-                            vn = math.sqrt(vn)
-                            bj, bs = None, None
-                            for j in range(k):
-                                dt = 0.0
-                                for i in range(d):
-                                    dt += float(v[i]) * cmat[j, i]
-                                dn = vn * cn[j]
-                                if dn == 0.0:
-                                    continue
-                                s = dt / dn
-                                if bs is None:
-                                    bj, bs = j, s
-                                elif math.isnan(s):
-                                    if not math.isnan(bs):
-                                        bj, bs = j, s
-                                elif (not math.isnan(bs)) and s > bs:
-                                    bj, bs = j, s
-                            bj = 0 if bj is None else bj
-                            out_cid[r] = cids_m[bj]
-                            if extra_err:
-                                er = 0.0
-                                for i in range(d):
-                                    dlt = float(v[i]) - cmat[bj, i]
-                                    er += dlt * dlt
-                                out_err[r] = er
-                arrays = [
-                    batch.column(0),
-                    batch.column(1),
-                    batch.column(2),
-                    sv,
-                    pa.array(
-                        [
-                            int(c) if k_ else None
-                            for c, k_ in zip(out_cid, keep)
-                        ],
-                        type=pa.int64(),
-                    ),
-                ]
-                names = ["vec_id", "label", "__m", "__sv", "__cid"]
-                if extra_err:
-                    arrays.append(
-                        pa.array(
-                            [
-                                float(e) if (k_ and not np.isnan(e)) else None
-                                for e, k_ in zip(out_err, keep)
-                            ],
-                            type=pa.float64(),
-                        )
-                    )
-                    names.append("__err")
-                keep_idx = np.nonzero(keep)[0]
-                rb = pa.record_batch(arrays, names=names)
-                if len(keep_idx) != n:
-                    rb = rb.take(pa.array(keep_idx))
-                yield rb
-
-        out = sliced.mapInArrow(_kernel, out_type)
+        out = sliced.mapInArrow(_pq_assign_kernel(mats, extra_err), out_type)
         if extra_err:
             out = out.withColumn("__err", F.round("__err", 6))
         return out

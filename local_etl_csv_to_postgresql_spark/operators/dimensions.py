@@ -10,17 +10,18 @@ Surrogate keys without SERIAL (SURVEY §7.4-1), two strategies:
   SERIAL column, so keys 1..n in natural-key order are EXACTLY what
   PostgreSQL assigns on a fresh load. The global window here is a
   single-task sort — fine for the builder's per-batch dimensional
-  cardinalities; warehouse.load_dimension switches the SAME key
-  assignment to the distributed two-phase rank (operators/ranking.py)
-  when a batch exceeds WarehouseConfig.large_dim_threshold, so huge
-  first loads never funnel through one task.
+  cardinalities.
 - ``hash``: ``xxhash64(natural_key)`` — stateless, shuffle-free, stable
-  across incremental loads and cluster sizes. The 100 TB choice when a
-  dimension is itself huge (e.g. one row per document); collision chance
-  at 64-bit is ~n²/2⁶⁵ (≈3e-7 for 100M keys).
+  across incremental loads and cluster sizes; collision chance at 64-bit
+  is ~n²/2⁶⁵ (≈3e-7 for 100M keys).
 
-Incremental appends keep ``dense`` keys stable by offsetting new keys
-with max(existing) — see warehouse.py.
+These keys belong to the IR (the frames a transform returns); they are
+NOT what lands in the warehouse. ``Warehouse.load_warehouse`` takes only
+the natural keys from ``fact_data`` and assigns warehouse keys itself in
+its dimension merge: dense ``row_number`` in natural-key order past
+max(existing), switching to the distributed two-phase rank
+(operators/ranking.py) above ``WarehouseConfig.large_dim_threshold`` —
+so a ``hash`` IR, which no caller uses, still loads dense keys.
 """
 
 from __future__ import annotations
@@ -28,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..schemas import DIMENSION_KEYS
 from .dates import build_dim_date_from_facts, date_key
 
 
@@ -63,12 +65,9 @@ def build_dimensions(valid_df: DataFrame, key_strategy: str = "dense") -> dict:
     """
     dims = {}
     dims["dim_date"] = build_dim_date_from_facts(valid_df, "date")
-    for name, src_col, nk, sk in [
-        ("dim_category", "category", "category_name", "category_key"),
-        ("dim_merchant", "merchant", "merchant_name", "merchant_key"),
-        ("dim_payment_method", "payment_method", "payment_method_name", "payment_method_key"),
-        ("dim_user", "user_id", "user_id", "user_key"),
-    ]:
+    for name, (src_col, nk, sk) in DIMENSION_KEYS.items():
+        if sk is None:
+            continue
         distinct = (
             valid_df.select(F.col(src_col).alias(nk))
             .filter(F.col(src_col).isNotNull())

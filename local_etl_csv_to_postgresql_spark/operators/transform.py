@@ -6,9 +6,12 @@ clean (standardize + trim + keep-first dedup) → validate (rule engine)
 dim_merchant, dim_payment_method, dim_user — plus the per-rule issue
 accounting the reference logs.
 
-The cleaned+flagged frame is the only thing persisted; everything
-downstream (4 distincts + fact projection) shares that cache so the raw
-input is scanned once per run, not once per output.
+The flagged frame (validation) and the valid frame derived from it are
+persisted; everything downstream (4 distincts + fact projection, the
+quarantine write, the load) shares those caches so the raw input is
+scanned once per run, not once per output. Both ride on the
+``TransformResult``; the caller frees them with ``release()`` once the
+batch is loaded.
 """
 
 from __future__ import annotations
@@ -41,6 +44,14 @@ class TransformResult:
     valid_rows: int
     issue_counts: dict = field(default_factory=dict)
     invalid: "DataFrame | None" = None  # rejects with __failed_rules labels
+    valid: "DataFrame | None" = None  # persisted; tables derive from it
+    flagged: "DataFrame | None" = None  # persisted; valid/invalid derive from it
+
+    def release(self) -> None:
+        """Unpersist the batch's cached frames (idempotent)."""
+        for df in (self.valid, self.flagged):
+            if df is not None:
+                df.unpersist()
 
 
 def clean_transactions(df: DataFrame) -> DataFrame:
@@ -85,6 +96,7 @@ def transform_transactions(
     result: ValidationResult = validate_transactions(cleaned, cfg)
     input_rows = int(obs.get["n"])
     if input_rows == 0:
+        result.flagged.unpersist()
         raise TransformError("Input DataFrame is empty")
     valid = result.valid.persist()
     try:
@@ -98,7 +110,10 @@ def transform_transactions(
             valid_rows=result.valid_rows,
             issue_counts=result.issue_counts,
             invalid=result.invalid,
+            valid=valid,
+            flagged=result.flagged,
         )
     except Exception:
         valid.unpersist()
+        result.flagged.unpersist()
         raise

@@ -40,6 +40,7 @@ class ValidationResult:
     issue_counts: dict  # rule name -> #rows violating
     input_rows: int
     valid_rows: int
+    flagged: DataFrame | None = None  # the persisted frame both derive from
 
 
 def _rule_columns(cfg: ValidationConfig) -> dict:
@@ -140,4 +141,5 @@ def validate_transactions(
         issue_counts=issue_counts,
         input_rows=total,
         valid_rows=n_valid,
+        flagged=flagged,
     )

@@ -75,18 +75,19 @@ def run_etl_pipeline(
     cfg = cfg or EngineConfig()
     res = PipelineResult(file_path=file_path)
     t0 = time.time()
+    tr = None
     try:
-        # PHASE 1 — extract
+        # PHASE 1 — extract (lazy scan + the structural/emptiness probe;
+        # the row count comes from the transform's observed input count,
+        # so the source is not scanned a second time just to count it)
         t = time.time()
         try:
             raw = extract_any(spark, file_path, fmt=source_format)
-            res.extracted_rows = raw.count()
         except ExtractError as e:
             raise PipelineExtractError(str(e)) from e
         res.phase_times["extract"] = time.time() - t
         logger.info(
-            "extract done: %d rows from %s in %.2fs",
-            res.extracted_rows, file_path, res.phase_times["extract"],
+            "extract done: opened %s in %.2fs", file_path, res.phase_times["extract"]
         )
 
         # PHASE 2 — transform
@@ -95,11 +96,13 @@ def run_etl_pipeline(
             tr = transform_transactions(raw, cfg.validation)
         except TransformError as e:
             raise PipelineTransformError(str(e)) from e
+        res.extracted_rows = tr.input_rows
         res.transformed_rows = tr.valid_rows
         res.issue_counts = tr.issue_counts
         res.phase_times["transform"] = time.time() - t
         logger.info(
-            "transform done: %d valid rows (%d dropped) in %.2fs",
+            "transform done: %d rows extracted, %d valid (%d dropped) in %.2fs",
+            res.extracted_rows,
             tr.valid_rows,
             res.extracted_rows - tr.valid_rows,
             res.phase_times["transform"],
@@ -136,8 +139,7 @@ def run_etl_pipeline(
             # first run seeds the continuous calendar (the Spark form of
             # the reference's populate_dim_date.sql setup step, 1,826
             # dates 2022-2026; data dates inside the range then skip as
-            # idempotent-append no-ops). The seed runs inside the
-            # dim_date worker thread so it overlaps the other dim loads.
+            # idempotent-append no-ops)
             stats = wh.load_warehouse(
                 tr.tables,
                 seed_dates=(cfg.dim_date_start, cfg.dim_date_end),
@@ -158,6 +160,12 @@ def run_etl_pipeline(
         res.status = "failed"
         res.error = str(e)
         logger.error("pipeline failed: %s", e)
+    finally:
+        # the batch's cached frames are dead once it is loaded (or has
+        # failed): free them on every exit path so a long-lived session
+        # running many batches holds none of them
+        if tr is not None:
+            tr.release()
     res.total_time = time.time() - t0
     return res
 

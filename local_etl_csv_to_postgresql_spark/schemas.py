@@ -95,16 +95,13 @@ DIMENSIONS = {
     "dim_user": DIM_USER_SCHEMA,
 }
 
-# natural key column per dimension (reference sql/schema.sql UNIQUE cols)
-NATURAL_KEYS = {
-    "dim_category": "category_name",
-    "dim_merchant": "merchant_name",
-    "dim_payment_method": "payment_method_name",
-    "dim_user": "user_id",
-}
-SURROGATE_KEYS = {
-    "dim_category": "category_key",
-    "dim_merchant": "merchant_key",
-    "dim_payment_method": "payment_method_key",
-    "dim_user": "user_key",
+# dimension -> (fact_data column that feeds it, natural key — the
+# reference's UNIQUE column in sql/schema.sql — and surrogate key);
+# dim_date's natural key IS its key, so it has no surrogate
+DIMENSION_KEYS = {
+    "dim_date": ("date_key", "date_key", None),
+    "dim_category": ("category", "category_name", "category_key"),
+    "dim_merchant": ("merchant", "merchant_name", "merchant_key"),
+    "dim_payment_method": ("payment_method", "payment_method_name", "payment_method_key"),
+    "dim_user": ("user_id", "user_id", "user_key"),
 }

@@ -11,19 +11,43 @@ Reference parity (SURVEY §2.1/§2.5, src/load.py):
 Spark-first design:
 - Tables are parquet directories under ``WarehouseConfig.path``; the
   fact table is partitioned by ``year_month`` so date-range predicates
-  prune files (replaces the reference's B-tree date indexes).
-- "ON CONFLICT DO NOTHING" becomes a ``left_anti`` join against the
-  current table followed by an append — the idempotent-append protocol.
-- Key enrichment joins fact→dims on natural keys with ``broadcast()``
-  hints: dims are orders of magnitude smaller than the fact, so all four
-  joins are shuffle-free map-side hash joins (the Spark analogue of the
-  reference's in-memory dict maps, src/load.py:368-420 /
-  LESSONS_LEARNED.md:28-31).
+  prune files (replaces the reference's B-tree date indexes). Every
+  table is read with its declared schema (``schemas.py``; the fact adds
+  its int ``year_month`` column), so opening a table launches no
+  footer-inference job. ``verify_schema`` alone reads the footers: it
+  reports what is on disk.
+- "ON CONFLICT DO NOTHING" for the five dimensions is ONE set-based
+  merge (``_merge_dimensions``): the batch's natural keys for every
+  dimension are exploded into a single ``(dim, key)`` frame, that frame
+  is ``left_anti``-joined against the union of the existing dimension
+  keys, and one aggregation returns each dimension's new-key count
+  together with its ``max(surrogate_key)``. Only dimensions that gained
+  rows are appended; new keys are dense ``row_number`` in natural-key
+  order past the existing max (the distributed two-phase rank of
+  ``operators/ranking.py`` above ``large_dim_threshold``), which is what
+  a SERIAL column assigns — so keys stay stable across incremental
+  loads. The warehouse assigns these keys itself: the surrogate keys a
+  transform's IR carries are not what lands. A first load runs the same
+  merge against empty frames of the declared schemas, with the seeded
+  calendar merged in as setup keys. New dimension rows are written to a
+  staging directory (one write job per grown table, overlapped) and then
+  published into the tables by renaming files, so the merge's cached
+  frames (which read those tables) stay valid for every append, and no
+  table gains rows before all of them are written.
+- Key enrichment joins fact→dims on natural keys through ONE broadcast
+  key map (all five dimensions, keyed ``dim:natural key``): dims are
+  orders of magnitude smaller than the fact, so the five joins are
+  shuffle-free map-side hash joins sharing a single broadcast (the
+  Spark analogue of the reference's in-memory dict maps,
+  src/load.py:368-420 / LESSONS_LEARNED.md:28-31). The same pass
+  left-joins the existing fact ids with a marker, so the one miss-check
+  aggregation also counts the rows already loaded; the fact append then
+  writes only unmarked rows and is skipped when nothing is new.
 - Atomicity (reference wraps the whole load in one transaction,
   src/load.py:778/872): parquet appends are not transactional across
-  tables; we stage new files per table and only "publish" after all
-  tables succeed (write to _staging, then move). Per SURVEY §7.4-5 this
-  is commit-marker emulation, documented rather than hidden.
+  tables. Every step is idempotent instead — a failed load re-run skips
+  the dimension keys and fact ids that already landed — so re-execution
+  converges without cross-table transactions.
 - JDBC mode: when ``jdbc_url`` is set, the same frames are written via
   ``df.write.jdbc`` (batchsize=1000 like the reference) for true
   PostgreSQL parity.
@@ -34,12 +58,20 @@ from __future__ import annotations
 import os
 import shutil
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .config import WarehouseConfig
-from .schemas import DIMENSIONS, NATURAL_KEYS, SURROGATE_KEYS
+from .schemas import DIMENSION_KEYS, DIMENSIONS, FACT_TRANSACTIONS_SCHEMA
+
+# the fact as stored: declared columns + the derived partition column
+FACT_STORED_SCHEMA = T.StructType(
+    FACT_TRANSACTIONS_SCHEMA.fields
+    + [T.StructField("year_month", T.IntegerType(), True)]
+)
 
 
 class LoadError(Exception):
@@ -58,15 +90,33 @@ class LoadStats:
     snapshot_version: int | None = None
 
 
+@dataclass
+class _EnrichedBatch:
+    """What ``enrich_fact`` learned about the frame it returned: the
+    persisted frame carrying the ``__loaded`` marker, the batch size
+    and how many of its ids the fact table already holds."""
+
+    result_id: int
+    marked: DataFrame
+    total: int
+    skipped: int
+
+
 class Warehouse:
     def __init__(self, spark: SparkSession, cfg: WarehouseConfig | None = None):
         self.spark = spark
         self.cfg = cfg or WarehouseConfig()
+        self._enriched: _EnrichedBatch | None = None
 
     # -- table plumbing ----------------------------------------------------
 
     def _path(self, table: str) -> str:
         return os.path.join(self.cfg.path, table)
+
+    def _schema(self, table: str) -> T.StructType | None:
+        if table == self.cfg.fact_table:
+            return FACT_STORED_SCHEMA
+        return DIMENSIONS.get(table)
 
     def exists(self, table: str) -> bool:
         p = self._path(table)
@@ -76,14 +126,23 @@ class Warehouse:
         )
 
     def read(self, table: str) -> DataFrame:
+        """Scan ``table`` with its declared schema (no footer job)."""
         if not self.exists(table):
             raise LoadError(f"Table does not exist: {table}")
-        return self.spark.read.parquet(self._path(table))
+        return self._reader(table).parquet(self._path(table))
+
+    def _reader(self, table: str):
+        schema = self._schema(table)
+        return self.spark.read if schema is None else self.spark.read.schema(schema)
 
     def read_or_empty(self, table: str, schema) -> DataFrame:
         if self.exists(table):
-            return self.spark.read.parquet(self._path(table))
-        return self.spark.createDataFrame([], schema)
+            return self.read(table)
+        # an empty relation the optimizer prunes (createDataFrame([])
+        # would plan a scan of an empty RDD and launch jobs for it)
+        return self.spark.range(0).selectExpr(
+            *[f"CAST(NULL AS {f.dataType.simpleString()}) AS `{f.name}`" for f in schema]
+        )
 
     def drop_all(self) -> None:
         if os.path.isdir(self.cfg.path):
@@ -95,70 +154,185 @@ class Warehouse:
             if self.exists(t):
                 self.read(t).createOrReplaceTempView(t)
 
-    # -- idempotent dimension append (S5/S6) -------------------------------
+    # -- idempotent dimension merge (S5/S6) --------------------------------
+
+    def _merge_dimensions(
+        self, source: DataFrame, keys: dict[str, str], setup: DataFrame | None = None
+    ) -> dict:
+        """Append to each dimension in ``keys`` the natural keys of
+        ``source`` (``keys[table]`` names the source column) it does not
+        hold yet; returns ``{table: batch keys appended}``. ``setup``
+        holds more ``(dim, key)`` pairs (the seeded calendar) that are
+        merged the same way but are not batch data, so not counted.
+
+        One exploded ``(dim, key)`` frame is anti-joined against the
+        union of the existing keys, and ONE aggregation collects every
+        dimension's new-key counts and current ``max(surrogate_key)``.
+        Keys travel as strings through the merge and are cast back to
+        the declared type, so natural-key order is the typed order.
+        Dimensions that gained nothing are not written; a missing table
+        is created (with whatever is new, possibly nothing). Expressions
+        are SQL strings: each is one call into the JVM, where composed
+        Column objects cost one per function and operand.
+        """
+        pairs = ", ".join(
+            f"named_struct('dim', '{t}', 'key', CAST(`{col}` AS STRING), 'batch', 1)"
+            for t, col in keys.items()
+        )
+        candidates = source.selectExpr(f"inline(array({pairs}))")
+        if setup is not None:
+            candidates = candidates.union(setup.selectExpr("dim", "key", "0 AS batch"))
+        existing = reduce(
+            DataFrame.union,
+            [
+                self.read_or_empty(t, DIMENSIONS[t]).selectExpr(
+                    f"'{t}' AS dim",
+                    f"CAST(`{nk}` AS STRING) AS key",
+                    f"CAST({f'`{sk}`' if sk else 'NULL'} AS BIGINT) AS sk",
+                )
+                for t in keys
+                for _, nk, sk in [DIMENSION_KEYS[t]]
+            ],
+        )
+        # one row per new key; ``batch`` is 0 when setup also holds it
+        new_keys = (
+            candidates.where("key IS NOT NULL")
+            .join(F.broadcast(existing.select("dim", "key")), ["dim", "key"], "left_anti")
+            .groupBy("dim", "key")
+            .agg(F.expr("min(batch) AS batch"))
+            .persist()
+        )
+        keyed = None
+        try:
+            counts = (
+                new_keys.selectExpr("dim", "batch", "1 AS n", "CAST(NULL AS BIGINT) AS sk")
+                .union(existing.selectExpr("dim", "0", "0", "sk"))
+                .groupBy("dim")
+                .agg(F.expr("sum(batch)"), F.expr("sum(n)"), F.expr("max(sk)"))
+                .collect()
+            )
+            found = {dim: (int(b), int(n), sk or 0) for dim, b, n, sk in counts}
+            new = {t: found.get(t, (0, 0, 0)) for t in keys}
+            grown = [t for t in keys if new[t][1] or not self.exists(t)]
+            offsets = {t: new[t][2] for t in grown if DIMENSION_KEYS[t][2]}
+            if offsets:
+                # keys for every grown keyed dimension in one ranked
+                # frame, cached so each append reads it, not re-ranks
+                keyed = self._assign_keys(
+                    new_keys, offsets, max(new[t][1] for t in offsets)
+                ).persist()
+            # stage, then publish: a Spark write into a table path drops
+            # every cached plan that reads that path, so appending in
+            # place would make the next append recompute the merge
+            staging = os.path.join(self.cfg.path, "_staging")
+            shutil.rmtree(staging, ignore_errors=True)
+
+            def stage(t: str) -> None:
+                rows = self._dimension_rows(
+                    (keyed if t in offsets else new_keys).where(f"dim = '{t}'"), t
+                )
+                rows.write.parquet(os.path.join(staging, t))
+                if self.cfg.jdbc_url:
+                    self._jdbc_write(rows, t, "append" if self.exists(t) else "overwrite")
+
+            # the staged appends write disjoint directories from cached
+            # frames, so their small jobs can overlap: a first load
+            # stages all five tables, a delta usually two
+            from concurrent.futures import ThreadPoolExecutor
+
+            with ThreadPoolExecutor(max_workers=max(len(grown), 1)) as pool:
+                list(pool.map(stage, grown))
+            self._publish(staging, grown)
+        finally:
+            new_keys.unpersist()
+            if keyed is not None:
+                keyed.unpersist()
+        for t in grown:
+            # the publish moved files behind Spark's back
+            self.spark.catalog.refreshByPath(self._path(t))
+        return {t: new[t][0] for t in keys}
+
+    def _publish(self, staging: str, tables: list) -> None:
+        """Move each staged table into the warehouse: a missing table is
+        its staged directory renamed into place; an existing one gains
+        the staged part files, one rename each."""
+        for t in tables:
+            src, dst = os.path.join(staging, t), self._path(t)
+            if not self.exists(t):
+                shutil.rmtree(dst, ignore_errors=True)
+                os.replace(src, dst)
+                continue
+            for name in os.listdir(src):
+                if name.startswith(("part-", ".part-")):  # data + checksum
+                    os.replace(os.path.join(src, name), os.path.join(dst, name))
+        shutil.rmtree(staging, ignore_errors=True)
+
+    def _assign_keys(self, new_keys: DataFrame, offsets: dict, largest: int) -> DataFrame:
+        """The new keys of the dimensions in ``offsets`` with ``sk``: per
+        dimension, dense ``row_number`` in typed natural-key order past
+        that dimension's ``offsets`` entry."""
+        dims = ", ".join(f"'{t}'" for t in offsets)
+        int_dims = ", ".join(
+            f"'{t}'"
+            for t in offsets
+            if DIMENSIONS[t][DIMENSION_KEYS[t][1]].dataType != T.StringType()
+        )
+        # integer keys sort numerically (the string form would put "10"
+        # before "9"); string keys sort as themselves
+        order = ["key"]
+        if int_dims:
+            order.insert(0, f"CASE WHEN dim IN ({int_dims}) THEN CAST(key AS BIGINT) END")
+        todo = new_keys.where(f"dim IN ({dims})")
+        if largest > self.cfg.large_dim_threshold:
+            # a huge dimension batch (first load of a document- or
+            # user-grain dim) must not funnel through one sort task;
+            # the distributed two-phase rank assigns the IDENTICAL
+            # dense keys (row_number in natural-key order)
+            from .operators.ranking import attach_global_row_number
+
+            ranked = attach_global_row_number(
+                todo, order_by=[F.expr(o) for o in order], partition_by=["dim"],
+                rn_col="__rn",
+            )
+        else:
+            ranked = todo.selectExpr(
+                "dim", "key",
+                f"row_number() OVER (PARTITION BY dim ORDER BY {', '.join(order)}) AS __rn",
+            )
+        offset = " ".join(f"WHEN '{t}' THEN {int(o)}" for t, o in offsets.items())
+        return ranked.selectExpr(
+            "dim", "key", f"CAST(__rn + CASE dim {offset} END AS BIGINT) AS sk"
+        )
+
+    def _dimension_rows(self, new_keys: DataFrame, table: str) -> DataFrame:
+        """Declared-schema rows for ``table`` from its slice of the new
+        keys (ranked ones, for a surrogate-keyed dimension); dim_date's
+        calendar attributes derive from the date key."""
+        schema = DIMENSIONS[table]
+        _, nk, sk = DIMENSION_KEYS[table]
+        if sk is None:
+            from .operators.dates import with_date_attributes
+
+            dates = new_keys.selectExpr("to_date(key, 'yyyyMMdd') AS date")
+            return with_date_attributes(dates, "date").select(schema.fieldNames())
+        return new_keys.selectExpr(
+            f"sk AS `{sk}`", f"CAST(key AS {schema[nk].dataType.simpleString()}) AS `{nk}`"
+        )
 
     def load_dimension(
         self, df: DataFrame, table: str, natural_key: str, surrogate_key: str | None = None
     ) -> int:
-        """Append rows whose natural key is not already present; new rows
-        get surrogate keys offset past max(existing) so keys are stable
-        across incremental loads (SURVEY §7.4-1).
-
-        Input ``df`` must already carry surrogate keys starting at 1
-        (dense strategy); on incremental loads the keys are reassigned
-        relative to the existing table.
-        """
-        if not self.exists(table):
-            # piggyback the inserted-count on the write action itself
-            # (CollectMetrics above the writer): one job instead of
-            # write + a second read-the-footers count job per table —
-            # at 6 tables per load the extra jobs were the measured
-            # fixed cost of the load phase
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            self._write(df.observe(obs, F.count(F.lit(1)).alias("n")), table)
-            return int(obs.get["n"])
-
-        existing = self.read(table)
-        new_rows = df.join(
-            F.broadcast(existing.select(natural_key)), natural_key, "left_anti"
-        )
-        n_new = new_rows.count()
-        if n_new == 0:
-            return 0
-        if surrogate_key:
-            offset = existing.agg(F.max(surrogate_key)).first()[0] or 0
-            if n_new > self.cfg.large_dim_threshold:
-                # a huge dimension batch (first load of a document- or
-                # user-grain dim) must not funnel through one sort task;
-                # the distributed two-phase rank assigns the IDENTICAL
-                # dense keys (row_number in natural-key order)
-                from .operators.ranking import attach_global_row_number
-
-                new_rows = (
-                    attach_global_row_number(
-                        new_rows.drop(surrogate_key),
-                        order_by=[F.col(natural_key).asc()],
-                        rn_col="__rn",
-                    )
-                    .withColumn(
-                        surrogate_key,
-                        (F.col("__rn") + F.lit(offset)).cast("long"),
-                    )
-                    .drop("__rn")
-                )
-            else:
-                from pyspark.sql import Window
-
-                w = Window.orderBy(F.col(natural_key).asc())
-                new_rows = new_rows.drop(surrogate_key).withColumn(
-                    surrogate_key,
-                    (F.row_number().over(w) + F.lit(offset)).cast("long"),
-                )
-            new_rows = new_rows.select(existing.columns)
-        self._append(new_rows, table)
-        return n_new
+        """One-table entry point of the dimension merge: append the
+        natural keys of ``df`` that ``table`` does not hold yet and
+        return how many were appended. Surrogate keys are assigned by
+        the merge (dense, past max(existing)); any key column ``df``
+        carries is ignored."""
+        declared = DIMENSION_KEYS.get(table, (None, None, None))[1:]
+        if (natural_key, surrogate_key) != declared:
+            raise LoadError(
+                f"{table} is keyed by {declared}, not {(natural_key, surrogate_key)}"
+            )
+        return self._merge_dimensions(df, {table: natural_key})[table]
 
     def load_dim_date(self, df: DataFrame) -> int:
         """S6: dim_date idempotent append on date_key."""
@@ -175,95 +349,113 @@ class Warehouse:
     # -- key maps + fact enrichment (S9 + J1/J2) ---------------------------
 
     def enrich_fact(self, fact_df: DataFrame) -> DataFrame:
-        """J1: replace natural keys with surrogate keys via 4 broadcast
-        joins + J2 date-key existence check.
+        """J1: replace natural keys with surrogate keys via broadcast
+        joins + J2 date-key existence check + the already-loaded test.
 
+        All five dimensions form ONE key map, ``(dim:natural key) ->
+        surrogate key``; each fact column probes it with the same
+        composite key shape, so the five joins share a single broadcast.
         Unmatched keys raise (reference src/load.py:461-466 errors on any
         unmapped value) — detected with left joins + ONE aggregation
-        instead of per-row dict probes.
+        instead of per-row dict probes. The same aggregation counts the
+        batch rows whose ``transaction_id`` the fact table already holds
+        (a left join of the existing ids with a marker), so
+        ``load_fact`` knows inserted/skipped before it writes.
         """
-        dims = {
-            "dim_category": ("category", "category_name", "category_key"),
-            "dim_merchant": ("merchant", "merchant_name", "merchant_key"),
-            "dim_payment_method": ("payment_method", "payment_method_name", "payment_method_key"),
-            "dim_user": ("user_id", "user_id", "user_key"),
-        }
-        out = fact_df
-        for table, (src_col, nk, sk) in dims.items():
-            dim = self.read(table).select(
-                F.col(nk).alias(f"__nk_{sk}"), F.col(sk)
-            )
-            out = out.join(
-                F.broadcast(dim), out[src_col] == dim[f"__nk_{sk}"], "left"
-            ).drop(f"__nk_{sk}")
-        dim_date_keys = self.read("dim_date").select("date_key").withColumn(
-            "__date_ok", F.lit(True)
-        )
-        out = out.join(F.broadcast(dim_date_keys), "date_key", "left")
-
-        # the joined frame backs three actions (this miss-check, the fact
-        # count, the fact write) — persist so the 5-join plan runs once;
-        # load_warehouse unpersists after the fact lands
-        out = out.persist()
-        self._enriched_cache = out
-
-        missing = out.agg(
-            *[
-                F.sum(F.col(sk).isNull().cast("long")).alias(sk)
-                for _, (_, _, sk) in dims.items()
+        keymap = reduce(
+            DataFrame.union,
+            [
+                self.read(t).selectExpr(
+                    f"concat('{t}:', CAST(`{nk}` AS STRING)) AS __k",
+                    f"CAST({f'`{sk}`' if sk else 'NULL'} AS BIGINT) AS __sk",
+                )
+                for t, (_, nk, sk) in DIMENSION_KEYS.items()
             ],
-            F.sum((~F.coalesce(F.col("__date_ok"), F.lit(False))).cast("long")).alias(
-                "date_key"
-            ),
-            F.count(F.lit(1)).alias("__total"),
+        )
+        out = fact_df
+        for t, (src, _, sk) in DIMENSION_KEYS.items():
+            out = out.join(
+                F.broadcast(keymap),
+                F.expr(f"concat('{t}:', CAST(`{src}` AS STRING)) = __k"),
+                "left",
+            )
+            if sk:
+                out = out.drop("__k").withColumnRenamed("__sk", sk)
+            else:
+                out = out.selectExpr("*", "__k IS NOT NULL AS __date_ok").drop("__k", "__sk")
+        out = self._mark_loaded(out)
+
+        # the joined frame backs the miss-check and the fact write —
+        # persist so the join plan runs once; load_warehouse unpersists
+        # after the fact lands
+        out = out.persist()
+        self._release_enriched()
+
+        checks = [sk for _, _, sk in DIMENSION_KEYS.values() if sk]
+        missing = out.agg(
+            *[F.expr(f"count_if(`{sk}` IS NULL) AS `{sk}`") for sk in checks],
+            F.expr("count_if(__date_ok IS NOT TRUE) AS date_key"),
+            F.expr("count(1) AS __total"),
+            F.expr("count(__loaded) AS __loaded"),
         ).first()
-        total = int(missing["__total"])
-        problems = {
-            k: int(missing[k] or 0)
-            for k in missing.asDict()
-            if k != "__total" and missing[k]
-        }
+        problems = {k: missing[k] for k in checks + ["date_key"] if missing[k]}
         if problems:
+            out.unpersist()
             raise LoadError(f"Unmapped dimension keys in fact batch: {problems}")
 
-        result = out.select(
-            "transaction_id", "date_key", "category_key", "merchant_key",
-            "payment_method_key", "user_key", "amount",
+        result = out.select(*FACT_TRANSACTIONS_SCHEMA.fieldNames())
+        self._enriched = _EnrichedBatch(
+            id(result), out, missing["__total"], missing["__loaded"]
         )
-        # stash the batch size measured by the miss-check aggregation so
-        # load_fact skips its own count() job over the same frame
-        self._enriched_total = (id(result), total)
         return result
+
+    def _mark_loaded(self, df: DataFrame) -> DataFrame:
+        """``df`` plus ``__loaded``: true where the fact table already
+        holds the row's transaction_id, null where it does not."""
+        if not self.exists(self.cfg.fact_table):
+            return df.withColumn("__loaded", F.lit(None).cast("boolean"))
+        loaded = self.read(self.cfg.fact_table).select(
+            "transaction_id", F.lit(True).alias("__loaded")
+        )
+        return df.join(loaded, "transaction_id", "left")
+
+    def _release_enriched(self) -> None:
+        if self._enriched is not None:
+            self._enriched.marked.unpersist()
+            self._enriched = None
 
     # -- fact idempotent append (S7/J3) ------------------------------------
 
     def load_fact(self, enriched: DataFrame) -> tuple[int, int]:
-        """S7: anti-join on transaction_id then append; returns
-        (inserted, skipped) like the reference (src/load.py:585-696).
+        """S7: append the batch rows whose ``transaction_id`` is not in
+        the fact table yet; returns (inserted, skipped) like the
+        reference (src/load.py:585-696).
 
-        Scale note: the anti-join shuffles on transaction_id only when the
-        existing side is large; Catalyst/AQE broadcasts the smaller side.
-        At 100 TB the existing-key probe should be narrowed first — we
-        read only the transaction_id column (column pruning) and, when the
-        fact table is month-partitioned and the batch spans few months,
-        partition-prune via the batch's date_key range.
+        For the frame ``enrich_fact`` returned, both counts are already
+        known from its miss-check aggregation; any other frame is marked
+        and counted here in one aggregation. Either way the write is
+        skipped when nothing is new, and no count rides on the write.
+
+        Scale note: the existing-id probe reads only the transaction_id
+        column (column pruning); Catalyst/AQE broadcasts it while it is
+        small and shuffles on transaction_id once it is not.
         """
-        table = self.cfg.fact_table
-        stashed = getattr(self, "_enriched_total", None)
-        if stashed is not None and stashed[0] == id(enriched):
-            total = stashed[1]
-            self._enriched_total = None
-        else:
-            total = enriched.count()
-        if not self.exists(table):
-            self._write_fact(enriched)
-            return total, 0
-        existing_ids = self.read(table).select("transaction_id")
-        new_rows = enriched.join(existing_ids, "transaction_id", "left_anti")
-        inserted = new_rows.count()
+        batch = self._enriched
+        if batch is None or batch.result_id != id(enriched):
+            marked = self._mark_loaded(enriched)
+            row = marked.agg(
+                F.count(F.lit(1)).alias("n"), F.count("__loaded").alias("loaded")
+            ).first()
+            batch = _EnrichedBatch(id(enriched), marked, int(row["n"]), int(row["loaded"]))
+        inserted = batch.total - batch.skipped
         if inserted:
-            self._write_fact(new_rows, mode="append")
-        return inserted, total - inserted
+            new_rows = batch.marked.filter(F.col("__loaded").isNull()).select(
+                *FACT_TRANSACTIONS_SCHEMA.fieldNames()
+            )
+            self._write_fact(
+                new_rows, "append" if self.exists(self.cfg.fact_table) else "overwrite"
+            )
+        return inserted, batch.skipped
 
     # -- writers -----------------------------------------------------------
 
@@ -337,14 +529,6 @@ class Warehouse:
             "files_after": after,
             "snapshots_pruned": pruned,
         }
-
-    def _write(self, df: DataFrame, table: str, mode: str = "overwrite") -> None:
-        df.write.mode(mode).parquet(self._path(table))
-        if self.cfg.jdbc_url:
-            self._jdbc_write(df, table, mode)
-
-    def _append(self, df: DataFrame, table: str) -> None:
-        self._write(df, table, mode="append")
 
     def _jdbc_write(self, df: DataFrame, table: str, mode: str) -> None:
         (
@@ -429,9 +613,7 @@ class Warehouse:
                 f"{len(missing)} files removed by compaction — "
                 "historical versions do not survive a layout rewrite"
             )
-        return (
-            self.spark.read.option("basePath", root).parquet(*files)
-        )
+        return self._reader(table).option("basePath", root).parquet(*files)
 
     def prune_invalid_snapshots(self) -> list[int]:
         """Drop manifests whose file lists no longer exist (a compaction
@@ -457,56 +639,36 @@ class Warehouse:
     # -- full load (phase 3 orchestration, src/load.py:703-913) ------------
 
     def load_warehouse(self, tables: dict, seed_dates: tuple | None = None) -> LoadStats:
-        """Load 5 dims then the enriched fact, with inserted/skipped
-        accounting. On any error the protocol stops; already-appended
-        dimension rows are idempotent on re-run (same natural keys skip),
-        which is how re-execution converges without cross-table
-        transactions.
+        """Merge the batch into the 5 dims, then append the enriched
+        fact, with inserted/skipped accounting.
 
-        ``seed_dates=(start, end)``: seed the continuous calendar first
-        if dim_date doesn't exist — inside the dim_date worker thread,
-        so the seed write overlaps the other dimension loads instead of
-        running as a sequential pre-step. Seeded rows are setup, not
-        batch data: they are excluded from ``dims_inserted`` (same
-        accounting as the former pipeline-level pre-seed)."""
+        The dimensions take their natural keys from ``tables["fact_data"]``
+        in one set-based merge (``_merge_dimensions``); the IR's
+        dimension frames are not read, since every dimension row is a
+        function of its natural key plus the key the merge assigns. On
+        any error the protocol stops; already-appended dimension rows are
+        idempotent on re-run (same natural keys skip), which is how
+        re-execution converges without cross-table transactions.
+
+        ``seed_dates=(start, end)``: when dim_date doesn't exist, the
+        continuous calendar joins the same merge as setup keys. Seeded
+        rows are setup, not batch data: they are excluded from
+        ``dims_inserted`` (a batch date inside the calendar counts as
+        already present, as if the calendar had been seeded first)."""
         stats = LoadStats()
-
-        def _load_dim_date() -> int:
-            if seed_dates is not None and not self.exists("dim_date"):
-                self.seed_dim_date(*seed_dates)
-            return self.load_dim_date(tables["dim_date"])
-
         try:
-            # the 5 dimension loads touch disjoint tables and share the
-            # persisted `valid` cache — run them as concurrent driver
-            # threads so their (small) Spark jobs overlap instead of
-            # queueing. Wall time drops from sum to max; on a cluster the
-            # same pattern keeps executors busy while tiny dim jobs
-            # round-trip the scheduler. Spark's job scheduler is
-            # thread-safe, and block-level locking makes the concurrent
-            # first touch of the cache compute each partition once.
-            from concurrent.futures import ThreadPoolExecutor
+            calendar = None
+            if seed_dates is not None and not self.exists("dim_date"):
+                from .operators.dates import build_dim_date
 
-            dim_jobs = {
-                "dim_date": _load_dim_date,
-                **{
-                    t: (
-                        lambda t=t: self.load_dimension(
-                            tables[t], t, NATURAL_KEYS[t], SURROGATE_KEYS[t]
-                        )
-                    )
-                    for t in (
-                        "dim_category",
-                        "dim_merchant",
-                        "dim_payment_method",
-                        "dim_user",
-                    )
-                },
-            }
-            with ThreadPoolExecutor(max_workers=len(dim_jobs)) as pool:
-                futures = {t: pool.submit(fn) for t, fn in dim_jobs.items()}
-                for t, fut in futures.items():
-                    stats.dims_inserted[t] = fut.result()
+                calendar = build_dim_date(self.spark, *seed_dates).selectExpr(
+                    "'dim_date' AS dim", "CAST(date_key AS STRING) AS key"
+                )
+            stats.dims_inserted = self._merge_dimensions(
+                tables["fact_data"],
+                {t: src for t, (src, _, _) in DIMENSION_KEYS.items()},
+                setup=calendar,
+            )
             enriched = self.enrich_fact(tables["fact_data"])
             stats.fact_inserted, stats.fact_skipped = self.load_fact(enriched)
             if self.cfg.snapshot_on_load:
@@ -517,10 +679,7 @@ class Warehouse:
             stats.error = str(e)
             raise
         finally:
-            cached = getattr(self, "_enriched_cache", None)
-            if cached is not None:
-                cached.unpersist()
-                self._enriched_cache = None
+            self._release_enriched()
         return stats
 
     # -- schema verification (reference sql/verify_schema.sql) -------------
@@ -537,18 +696,21 @@ class Warehouse:
         are cheap aggregates; at cluster scale the fact FK scans are the
         only real work and each is a single anti-join.
         """
-        from .schemas import FACT_TRANSACTIONS_SCHEMA
-
         declared = dict(DIMENSIONS)
         declared[self.cfg.fact_table] = FACT_TRANSACTIONS_SCHEMA
         rows: list[tuple[str, str, str, str]] = []
+
+        def on_disk(table: str) -> DataFrame:
+            # the report describes what is on disk, so it infers the
+            # schema from the file footers instead of declaring it
+            return self.spark.read.parquet(self._path(table))
 
         for table, schema in declared.items():
             if not self.exists(table):
                 rows.append(("exists", table, "fail", "table missing"))
                 continue
             rows.append(("exists", table, "pass", ""))
-            df = self.read(table)
+            df = on_disk(table)
             rows.append(("row_count", table, "pass", str(df.count())))
 
             want = {(f.name, f.dataType.simpleString()) for f in schema.fields}
@@ -566,13 +728,12 @@ class Warehouse:
                 rows.append(("columns", table, "pass", ""))
 
         # unique natural keys (reference UNIQUE constraints)
-        unique_cols = dict(NATURAL_KEYS)
-        unique_cols["dim_date"] = "date_key"
+        unique_cols = {t: nk for t, (_, nk, _) in DIMENSION_KEYS.items()}
         unique_cols[self.cfg.fact_table] = "transaction_id"
         for table, key in unique_cols.items():
             if not self.exists(table):
                 continue
-            df = self.read(table)
+            df = on_disk(table)
             total, distinct = (
                 df.agg(
                     F.count(key).alias("n"),
@@ -586,7 +747,7 @@ class Warehouse:
 
         # fact FK integrity (reference FK constraints -> anti-join counts)
         if self.exists(self.cfg.fact_table):
-            fact = self.read(self.cfg.fact_table)
+            fact = on_disk(self.cfg.fact_table)
             fks = {
                 "dim_date": ("date_key", "date_key"),
                 "dim_category": ("category_key", "category_key"),
@@ -597,7 +758,7 @@ class Warehouse:
             for dim, (fk, pk) in fks.items():
                 if not self.exists(dim):
                     continue
-                keys = self.read(dim).select(F.col(pk).alias("__dim_pk"))
+                keys = on_disk(dim).select(F.col(pk).alias("__dim_pk"))
                 orphans = fact.join(
                     F.broadcast(keys),
                     fact[fk] == F.col("__dim_pk"),
@@ -611,7 +772,7 @@ class Warehouse:
 
         # calendar CHECK ranges (reference sql/schema.sql:50-62)
         if self.exists("dim_date"):
-            dd = self.read("dim_date")
+            dd = on_disk("dim_date")
             checks = {
                 "quarter BETWEEN 1 AND 4": "quarter between 1 and 4",
                 "month BETWEEN 1 AND 12": "month between 1 and 12",

@@ -344,3 +344,30 @@ def test_pii_scan_and_redact_semantics(spark):
     assert "123-45-6789" not in joined
     assert "example.co.uk" not in joined
     assert "192.168.0.1" not in joined
+
+
+def test_pq_kernel_uniform_batch_of_other_width_takes_lowest_cid():
+    """A batch whose subvectors all share one length that differs from
+    the subspace's codebook width takes the irregular-row path: every
+    row falls back to the lowest cid with a NULL error."""
+    import numpy as np
+    import pyarrow as pa
+
+    from local_etl_csv_to_postgresql_spark.functions.entrypoints import (
+        _pq_assign_kernel,
+    )
+
+    cmat = np.array([[1.0, 0.0], [0.0, 1.0]])
+    mats = {0: (np.array([7, 9], dtype=np.int64), cmat, np.sqrt((cmat**2).sum(1)))}
+    batch = pa.record_batch(
+        [
+            pa.array([1, 2], pa.int64()),
+            pa.array([0, 1], pa.int32()),
+            pa.array([0, 0], pa.int32()),
+            pa.array([[0.0, 1.0, 0.5], [0.0, 2.0, 0.5]], pa.list_(pa.float64())),
+        ],
+        names=["vec_id", "label", "__m", "__sv"],
+    )
+    (out,) = list(_pq_assign_kernel(mats, extra_err=True)([batch]))
+    assert out.column("__cid").to_pylist() == [7, 7]
+    assert out.column("__err").to_pylist() == [None, None]

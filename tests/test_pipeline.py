@@ -73,6 +73,29 @@ def test_pipeline_end_to_end_and_rerun(spark, csv_path, tmp_path):
     assert rerun.loaded_rows == 0 and rerun.skipped_rows == 297
 
 
+def test_pipeline_runs_release_cached_frames(spark, csv_path, tmp_path):
+    """Every exit path frees the batch's persisted frames: consecutive
+    loads (one quarantining its rejects), a dry run and a load that
+    raises leave the session's persistent RDDs where they started."""
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    start = len(persistent())
+    cfg = EngineConfig(
+        warehouse=WarehouseConfig(path=str(tmp_path / "wh")),
+        quarantine_path=str(tmp_path / "quarantine"),
+    )
+    assert run_etl_pipeline(spark, csv_path, cfg).status == "success"
+    assert run_etl_pipeline(spark, csv_path, cfg).status == "success"
+    assert len(persistent()) == start
+    assert run_etl_pipeline(spark, csv_path, cfg, dry_run=True).status == "dry_run"
+    assert len(persistent()) == start
+    blocker = tmp_path / "not_a_dir"
+    blocker.write_text("")
+    unwritable = EngineConfig(warehouse=WarehouseConfig(path=str(blocker)))
+    with pytest.raises(Exception):
+        run_etl_pipeline(spark, csv_path, unwritable)
+    assert len(persistent()) == start
+
+
 def test_pipeline_dry_run_writes_nothing(spark, csv_path, tmp_path):
     wh_path = tmp_path / "wh_dry"
     cfg = EngineConfig(warehouse=WarehouseConfig(path=str(wh_path)))

@@ -294,3 +294,83 @@ def test_snapshot_time_travel_across_incremental_loads(spark, tmp_path):
     # post-compaction snapshot works again
     v3 = wh.snapshot()
     assert wh.read_version("fact_transactions", v3).count() == 8
+
+
+@pytest.mark.parametrize("drift", ["extra_column", "bigint_user_id"])
+def test_verify_schema_reads_on_disk_schema(spark, wh, valid_rows, drift):
+    """Tables are read with their declared schema, so the columns check
+    must look at the file footers to see drift on disk."""
+    _load(spark, wh, valid_rows)
+    if drift == "extra_column":
+        table, ddl = "dim_merchant", "merchant_key bigint, merchant_name string, note string"
+        rows = [(r["merchant_key"], r["merchant_name"], "x")
+                for r in wh.read(table).collect()]
+    else:
+        table, ddl = "dim_user", "user_key bigint, user_id bigint"
+        rows = [(r["user_key"], r["user_id"]) for r in wh.read(table).collect()]
+    spark.createDataFrame(rows, ddl).write.mode("overwrite").parquet(wh._path(table))
+    report = {(r["check_type"], r["table_name"]): r["status"]
+              for r in wh.verify_schema().collect()}
+    assert report[("columns", table)] == "fail"
+    assert report[("columns", "dim_category")] == "pass"
+
+
+def _max_job_id(spark) -> int:
+    # jobs outside any job group (the engine sets none)
+    return max(spark.sparkContext.statusTracker().getJobIdsForGroup(), default=-1)
+
+
+def _delta_rows(n_new: int):
+    from datetime import date
+
+    from local_etl_csv_to_postgresql_spark.sources.generator import generate_transactions
+
+    rows = [
+        [str(r[c]) for c in ("transaction_id", "date", "category", "amount",
+                             "merchant", "payment_method", "user_id")]
+        for r in generate_transactions(200, 20, 1, seed=31, end_date=date(2025, 12, 1))
+    ]
+    fresh = [[f"new{i}", "2023-06-20", "Dining", "9.99", f"Fresh Merchant {i}",
+              "Cash", str(900 + i)] for i in range(n_new)]
+    return rows, rows[:50] + fresh
+
+
+def test_delta_load_job_budget(spark, wh):
+    """Landing a delta (re-delivered ids, new merchants and users) on a
+    backfilled warehouse is one set-based dimension merge plus one fact
+    append: at most 30 Spark jobs for the whole load."""
+    backfill, delta = _delta_rows(5)
+    cfg = ValidationConfig(max_valid_ts=datetime(2026, 1, 1))
+    wh.load_warehouse(transform_transactions(rows_to_df(spark, backfill), cfg).tables)
+    res = transform_transactions(rows_to_df(spark, delta), cfg)
+    try:
+        first = _max_job_id(spark)
+        stats = wh.load_warehouse(res.tables)
+        jobs = _max_job_id(spark) - first
+    finally:
+        res.release()
+    assert stats.fact_inserted == 5 and stats.fact_skipped == 50
+    assert stats.dims_inserted["dim_merchant"] == 5
+    assert stats.dims_inserted["dim_user"] == 5
+    assert stats.dims_inserted["dim_date"] == 1
+    assert jobs <= 30, f"delta load launched {jobs} Spark jobs"
+
+
+def test_rerun_writes_no_parquet_file(spark, wh):
+    """Re-landing a batch with zero new rows appends nothing: no table,
+    fact or dimension, gains a parquet file."""
+    import glob
+
+    def files():
+        return sorted(glob.glob(f"{wh.cfg.path}/**/*.parquet", recursive=True))
+
+    backfill, _ = _delta_rows(0)
+    cfg = ValidationConfig(max_valid_ts=datetime(2026, 1, 1))
+    wh.load_warehouse(transform_transactions(rows_to_df(spark, backfill), cfg).tables)
+    before = files()
+    stats = wh.load_warehouse(
+        transform_transactions(rows_to_df(spark, backfill), cfg).tables
+    )
+    assert stats.fact_inserted == 0 and stats.fact_skipped == len(backfill)
+    assert not any(stats.dims_inserted.values())
+    assert files() == before
