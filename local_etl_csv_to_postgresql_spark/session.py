@@ -49,14 +49,6 @@ def get_spark(
             "spark.driver.extraJavaOptions",
             "-XX:ReservedCodeCacheSize=1g",
         )
-        # Spark keeps only 100 compiled codegen classes by default. One
-        # incremental load (transform, dimension merge, enrichment, fact
-        # append, validation queries) needs more than that, so every
-        # batch evicted and recompiled the same ~60-110 classes with
-        # Janino, the largest CPU cost of a small delta. The cache is
-        # keyed by generated source, which does not depend on the data,
-        # so a larger one stops the churn.
-        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

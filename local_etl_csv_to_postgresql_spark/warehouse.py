@@ -28,12 +28,10 @@ Spark-first design:
   a SERIAL column assigns — so keys stay stable across incremental
   loads. The warehouse assigns these keys itself: the surrogate keys a
   transform's IR carries are not what lands. A first load runs the same
-  merge against empty frames of the declared schemas, with the seeded
-  calendar merged in as setup keys. New dimension rows are written to a
-  staging directory (one write job per grown table, overlapped) and then
-  published into the tables by renaming files, so the merge's cached
-  frames (which read those tables) stay valid for every append, and no
-  table gains rows before all of them are written.
+  merge against empty frames of the declared schemas, after the calendar
+  is seeded (written whole: there is nothing to merge it against). The
+  merge's frames are local checkpoints, cut loose from the table paths
+  they read, so an append into one table leaves them valid for the next.
 - Key enrichment joins fact→dims on natural keys through ONE broadcast
   key map (all five dimensions, keyed ``dim:natural key``): dims are
   orders of magnitude smaller than the fact, so the five joins are
@@ -76,6 +74,15 @@ FACT_STORED_SCHEMA = T.StructType(
 
 class LoadError(Exception):
     pass
+
+
+def _release(df: DataFrame) -> None:
+    """Free the blocks of a ``localCheckpoint`` frame. They belong to
+    its RDD, not to the cache manager, so ``DataFrame.unpersist`` cannot;
+    the context drops them without ``RDD.unpersist``'s warning that a
+    checkpoint's lineage is gone (which is the point of one)."""
+    rdd = df._jdf.queryExecution().analyzed().rdd()
+    df.sparkSession.sparkContext._jsc.sc().unpersistRDD(rdd.id(), False)
 
 
 @dataclass
@@ -138,9 +145,11 @@ class Warehouse:
     def read_or_empty(self, table: str, schema) -> DataFrame:
         if self.exists(table):
             return self.read(table)
-        # an empty relation the optimizer prunes (createDataFrame([])
-        # would plan a scan of an empty RDD and launch jobs for it)
-        return self.spark.range(0).selectExpr(
+        # an empty relation the optimizer prunes: a false filter becomes
+        # an empty local relation, which drops out of unions and joins
+        # (createDataFrame([]) would plan a scan of an empty RDD, and
+        # range(0) a range scan, each with its own generated code)
+        return self.spark.range(0).where("false").selectExpr(
             *[f"CAST(NULL AS {f.dataType.simpleString()}) AS `{f.name}`" for f in schema]
         )
 
@@ -156,18 +165,14 @@ class Warehouse:
 
     # -- idempotent dimension merge (S5/S6) --------------------------------
 
-    def _merge_dimensions(
-        self, source: DataFrame, keys: dict[str, str], setup: DataFrame | None = None
-    ) -> dict:
+    def _merge_dimensions(self, source: DataFrame, keys: dict[str, str]) -> dict:
         """Append to each dimension in ``keys`` the natural keys of
         ``source`` (``keys[table]`` names the source column) it does not
-        hold yet; returns ``{table: batch keys appended}``. ``setup``
-        holds more ``(dim, key)`` pairs (the seeded calendar) that are
-        merged the same way but are not batch data, so not counted.
+        hold yet; returns ``{table: keys appended}``.
 
         One exploded ``(dim, key)`` frame is anti-joined against the
         union of the existing keys, and ONE aggregation collects every
-        dimension's new-key counts and current ``max(surrogate_key)``.
+        dimension's new-key count and current ``max(surrogate_key)``.
         Keys travel as strings through the merge and are cast back to
         the declared type, so natural-key order is the typed order.
         Dimensions that gained nothing are not written; a missing table
@@ -176,12 +181,9 @@ class Warehouse:
         Column objects cost one per function and operand.
         """
         pairs = ", ".join(
-            f"named_struct('dim', '{t}', 'key', CAST(`{col}` AS STRING), 'batch', 1)"
+            f"named_struct('dim', '{t}', 'key', CAST(`{col}` AS STRING))"
             for t, col in keys.items()
         )
-        candidates = source.selectExpr(f"inline(array({pairs}))")
-        if setup is not None:
-            candidates = candidates.union(setup.selectExpr("dim", "key", "0 AS batch"))
         existing = reduce(
             DataFrame.union,
             [
@@ -194,78 +196,52 @@ class Warehouse:
                 for _, nk, sk in [DIMENSION_KEYS[t]]
             ],
         )
-        # one row per new key; ``batch`` is 0 when setup also holds it
+        # one row per new key. The merge's frames are local checkpoints,
+        # not cached plans: a Spark write into a table path drops every
+        # cached plan that reads it, and these read every dimension
+        # table, so each append would make the next recompute the merge.
         new_keys = (
-            candidates.where("key IS NOT NULL")
+            source.selectExpr(f"inline(array({pairs}))")
+            .where("key IS NOT NULL")
             .join(F.broadcast(existing.select("dim", "key")), ["dim", "key"], "left_anti")
-            .groupBy("dim", "key")
-            .agg(F.expr("min(batch) AS batch"))
-            .persist()
+            .distinct()
+            .localCheckpoint(eager=False)
         )
         keyed = None
         try:
             counts = (
-                new_keys.selectExpr("dim", "batch", "1 AS n", "CAST(NULL AS BIGINT) AS sk")
-                .union(existing.selectExpr("dim", "0", "0", "sk"))
+                new_keys.selectExpr("dim", "1 AS n", "CAST(NULL AS BIGINT) AS sk")
+                .union(existing.selectExpr("dim", "0", "sk"))
                 .groupBy("dim")
-                .agg(F.expr("sum(batch)"), F.expr("sum(n)"), F.expr("max(sk)"))
+                .agg(F.expr("sum(n)"), F.expr("max(sk)"))
                 .collect()
             )
-            found = {dim: (int(b), int(n), sk or 0) for dim, b, n, sk in counts}
-            new = {t: found.get(t, (0, 0, 0)) for t in keys}
-            grown = [t for t in keys if new[t][1] or not self.exists(t)]
-            offsets = {t: new[t][2] for t in grown if DIMENSION_KEYS[t][2]}
+            found = {dim: (int(n), sk or 0) for dim, n, sk in counts}
+            new = {t: found.get(t, (0, 0))[0] for t in keys}
+            grown = [t for t in keys if new[t] or not self.exists(t)]
+            offsets = {t: found.get(t, (0, 0))[1] for t in grown if DIMENSION_KEYS[t][2]}
             if offsets:
                 # keys for every grown keyed dimension in one ranked
-                # frame, cached so each append reads it, not re-ranks
+                # frame, so each append reads it, not re-ranks
                 keyed = self._assign_keys(
-                    new_keys, offsets, max(new[t][1] for t in offsets)
-                ).persist()
-            # stage, then publish: a Spark write into a table path drops
-            # every cached plan that reads that path, so appending in
-            # place would make the next append recompute the merge
-            staging = os.path.join(self.cfg.path, "_staging")
-            shutil.rmtree(staging, ignore_errors=True)
-
-            def stage(t: str) -> None:
+                    new_keys, offsets, max(new[t] for t in offsets)
+                ).localCheckpoint(eager=False)
+            for t in grown:
                 rows = self._dimension_rows(
                     (keyed if t in offsets else new_keys).where(f"dim = '{t}'"), t
                 )
-                rows.write.parquet(os.path.join(staging, t))
-                if self.cfg.jdbc_url:
-                    self._jdbc_write(rows, t, "append" if self.exists(t) else "overwrite")
-
-            # the staged appends write disjoint directories from cached
-            # frames, so their small jobs can overlap: a first load
-            # stages all five tables, a delta usually two
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=max(len(grown), 1)) as pool:
-                list(pool.map(stage, grown))
-            self._publish(staging, grown)
+                self._write_dimension(rows, t)
         finally:
-            new_keys.unpersist()
+            _release(new_keys)
             if keyed is not None:
-                keyed.unpersist()
-        for t in grown:
-            # the publish moved files behind Spark's back
-            self.spark.catalog.refreshByPath(self._path(t))
-        return {t: new[t][0] for t in keys}
+                _release(keyed)
+        return new
 
-    def _publish(self, staging: str, tables: list) -> None:
-        """Move each staged table into the warehouse: a missing table is
-        its staged directory renamed into place; an existing one gains
-        the staged part files, one rename each."""
-        for t in tables:
-            src, dst = os.path.join(staging, t), self._path(t)
-            if not self.exists(t):
-                shutil.rmtree(dst, ignore_errors=True)
-                os.replace(src, dst)
-                continue
-            for name in os.listdir(src):
-                if name.startswith(("part-", ".part-")):  # data + checksum
-                    os.replace(os.path.join(src, name), os.path.join(dst, name))
-        shutil.rmtree(staging, ignore_errors=True)
+    def _write_dimension(self, rows: DataFrame, table: str) -> None:
+        mode = "append" if self.exists(table) else "overwrite"
+        rows.write.mode(mode).parquet(self._path(table))
+        if self.cfg.jdbc_url:
+            self._jdbc_write(rows, table, mode)
 
     def _assign_keys(self, new_keys: DataFrame, offsets: dict, largest: int) -> DataFrame:
         """The new keys of the dimensions in ``offsets`` with ``sk``: per
@@ -341,10 +317,15 @@ class Warehouse:
     def seed_dim_date(self, start, end) -> int:
         """Seed the continuous calendar range (reference
         sql/populate_dim_date.sql: GENERATE_SERIES 2022-2026 -> 1,826
-        rows). Idempotent: re-seeding skips existing date_keys."""
+        rows). Idempotent: re-seeding skips existing date_keys. A missing
+        calendar has nothing to merge against, so it is written whole."""
         from .operators.dates import build_dim_date
 
-        return self.load_dim_date(build_dim_date(self.spark, start, end))
+        calendar = build_dim_date(self.spark, start, end)
+        if self.exists("dim_date"):
+            return self.load_dim_date(calendar)
+        self._write_dimension(calendar, "dim_date")
+        return (end - start).days + 1
 
     # -- key maps + fact enrichment (S9 + J1/J2) ---------------------------
 
@@ -362,12 +343,14 @@ class Warehouse:
         (a left join of the existing ids with a marker), so
         ``load_fact`` knows inserted/skipped before it writes.
         """
+        # dim_date maps its key to itself, so all five joins read both
+        # key map columns: one identical build side, broadcast once
         keymap = reduce(
             DataFrame.union,
             [
                 self.read(t).selectExpr(
                     f"concat('{t}:', CAST(`{nk}` AS STRING)) AS __k",
-                    f"CAST({f'`{sk}`' if sk else 'NULL'} AS BIGINT) AS __sk",
+                    f"CAST(`{sk or nk}` AS BIGINT) AS __sk",
                 )
                 for t, (_, nk, sk) in DIMENSION_KEYS.items()
             ],
@@ -382,7 +365,7 @@ class Warehouse:
             if sk:
                 out = out.drop("__k").withColumnRenamed("__sk", sk)
             else:
-                out = out.selectExpr("*", "__k IS NOT NULL AS __date_ok").drop("__k", "__sk")
+                out = out.selectExpr("*", "__sk IS NOT NULL AS __date_ok").drop("__k", "__sk")
         out = self._mark_loaded(out)
 
         # the joined frame backs the miss-check and the fact write —
@@ -465,6 +448,12 @@ class Warehouse:
         )
 
     def _write_fact(self, df: DataFrame, mode: str = "overwrite") -> None:
+        if self.cfg.jdbc_url:
+            # mirror first: the parquet write refreshes every cached plan
+            # that reads the fact table, and ``df`` may be one (the new
+            # rows of the enriched frame); re-run after the append, it
+            # would find its ids loaded and mirror nothing
+            self._jdbc_write(df, self.cfg.fact_table, mode)
         out = self._fact_with_partition(df)
         writer_df = out
         if self.cfg.partition_fact_by_month:
@@ -478,8 +467,6 @@ class Warehouse:
         if self.cfg.partition_fact_by_month:
             writer = writer.partitionBy("year_month")
         writer.parquet(self._path(self.cfg.fact_table))
-        if self.cfg.jdbc_url:
-            self._jdbc_write(df, self.cfg.fact_table, mode)
 
     def compact_fact(self) -> dict:
         """Small-file compaction for the month-partitioned fact table:
@@ -651,23 +638,17 @@ class Warehouse:
         re-execution converges without cross-table transactions.
 
         ``seed_dates=(start, end)``: when dim_date doesn't exist, the
-        continuous calendar joins the same merge as setup keys. Seeded
+        continuous calendar is seeded first (``seed_dim_date``). Seeded
         rows are setup, not batch data: they are excluded from
-        ``dims_inserted`` (a batch date inside the calendar counts as
-        already present, as if the calendar had been seeded first)."""
+        ``dims_inserted``, and a batch date inside the calendar counts
+        as already present."""
         stats = LoadStats()
         try:
-            calendar = None
             if seed_dates is not None and not self.exists("dim_date"):
-                from .operators.dates import build_dim_date
-
-                calendar = build_dim_date(self.spark, *seed_dates).selectExpr(
-                    "'dim_date' AS dim", "CAST(date_key AS STRING) AS key"
-                )
+                self.seed_dim_date(*seed_dates)
             stats.dims_inserted = self._merge_dimensions(
                 tables["fact_data"],
                 {t: src for t, (src, _, _) in DIMENSION_KEYS.items()},
-                setup=calendar,
             )
             enriched = self.enrich_fact(tables["fact_data"])
             stats.fact_inserted, stats.fact_skipped = self.load_fact(enriched)

@@ -122,3 +122,43 @@ def test_jdbc_values_match_parquet(loaded):
         for r in wh.read("dim_category").select("category_name", "category_key").collect()
     )
     assert via_jdbc == via_parquet
+
+
+@pytest.fixture(scope="module", params=sorted(DIALECTS))
+def reloaded(request, spark, tmp_path_factory):
+    """A first load, then a second batch: re-delivered ids plus new ids,
+    merchants and users, so both the fact and dimensions append."""
+    dialect = DIALECTS[request.param]
+    if dialect["skip"]:
+        pytest.skip(dialect["skip"])
+    tmp = tmp_path_factory.mktemp(f"jdbc_reload_{request.param}")
+    url = dialect["url"](tmp)
+    cfg = EngineConfig(
+        warehouse=WarehouseConfig(
+            path=str(tmp / "wh"), jdbc_url=url, jdbc_properties=dialect["props"]
+        )
+    )
+    rows = [{k: str(v) for k, v in r.items()} for r in generate_transactions(400, 25, 1)]
+    fresh = [
+        dict(rows[0], transaction_id=f"new{i}", merchant=f"Fresh Merchant {i}",
+             user_id=str(9000 + i))
+        for i in range(7)
+    ]
+    wh = Warehouse(spark, cfg.warehouse)
+    wh.seed_dim_date(cfg.dim_date_start, cfg.dim_date_end)
+    stats = []
+    for batch in (rows[:300], rows[250:] + fresh):
+        result = transform_transactions(spark.createDataFrame(batch), cfg.validation)
+        try:
+            stats.append(wh.load_warehouse(result.tables))
+        finally:
+            result.release()
+    return spark, url, dialect["props"], wh, stats
+
+
+def test_second_load_mirrors_new_rows_to_jdbc(reloaded):
+    spark, url, props, wh, (_, second) = reloaded
+    assert second.fact_inserted > 0 and second.fact_skipped > 0
+    assert second.dims_inserted["dim_merchant"] > 0
+    for table in ("fact_transactions", "dim_merchant", "dim_user", "dim_date"):
+        assert _jdbc_count(spark, url, props, table) == wh.read(table).count(), table
