@@ -100,7 +100,7 @@ class LoadStats:
 @dataclass
 class _EnrichedBatch:
     """What ``enrich_fact`` learned about the frame it returned: the
-    persisted frame carrying the ``__loaded`` marker, the batch size
+    checkpointed frame carrying the ``__loaded`` marker, the batch size
     and how many of its ids the fact table already holds."""
 
     result_id: int
@@ -341,7 +341,9 @@ class Warehouse:
         instead of per-row dict probes. The same aggregation counts the
         batch rows whose ``transaction_id`` the fact table already holds
         (a left join of the existing ids with a marker), so
-        ``load_fact`` knows inserted/skipped before it writes.
+        ``load_fact`` knows inserted/skipped before it writes; it writes
+        the returned frame's rows from the checkpoint that aggregation
+        filled, not by re-running the joins.
         """
         # dim_date maps its key to itself, so all five joins read both
         # key map columns: one identical build side, broadcast once
@@ -368,14 +370,17 @@ class Warehouse:
                 out = out.selectExpr("*", "__sk IS NOT NULL AS __date_ok").drop("__k", "__sk")
         out = self._mark_loaded(out)
 
-        # the joined frame backs the miss-check and the fact write —
-        # persist so the join plan runs once; load_warehouse unpersists
-        # after the fact lands
-        out = out.persist()
+        # the miss-check and the fact write read one local checkpoint of
+        # the joined frame, so the join runs once; load_warehouse
+        # releases it after the fact lands. Not a cached plan: the plan
+        # reads the fact table, so the fact append would drop the cache
+        # and a later reader (the JDBC mirror) would re-run the join
+        # against the new ids.
+        marked = out.localCheckpoint(eager=False)
         self._release_enriched()
 
         checks = [sk for _, _, sk in DIMENSION_KEYS.values() if sk]
-        missing = out.agg(
+        missing = marked.agg(
             *[F.expr(f"count_if(`{sk}` IS NULL) AS `{sk}`") for sk in checks],
             F.expr("count_if(__date_ok IS NOT TRUE) AS date_key"),
             F.expr("count(1) AS __total"),
@@ -383,12 +388,12 @@ class Warehouse:
         ).first()
         problems = {k: missing[k] for k in checks + ["date_key"] if missing[k]}
         if problems:
-            out.unpersist()
+            _release(marked)
             raise LoadError(f"Unmapped dimension keys in fact batch: {problems}")
 
         result = out.select(*FACT_TRANSACTIONS_SCHEMA.fieldNames())
         self._enriched = _EnrichedBatch(
-            id(result), out, missing["__total"], missing["__loaded"]
+            id(result), marked, missing["__total"], missing["__loaded"]
         )
         return result
 
@@ -404,7 +409,7 @@ class Warehouse:
 
     def _release_enriched(self) -> None:
         if self._enriched is not None:
-            self._enriched.marked.unpersist()
+            _release(self._enriched.marked)
             self._enriched = None
 
     # -- fact idempotent append (S7/J3) ------------------------------------
@@ -448,12 +453,6 @@ class Warehouse:
         )
 
     def _write_fact(self, df: DataFrame, mode: str = "overwrite") -> None:
-        if self.cfg.jdbc_url:
-            # mirror first: the parquet write refreshes every cached plan
-            # that reads the fact table, and ``df`` may be one (the new
-            # rows of the enriched frame); re-run after the append, it
-            # would find its ids loaded and mirror nothing
-            self._jdbc_write(df, self.cfg.fact_table, mode)
         out = self._fact_with_partition(df)
         writer_df = out
         if self.cfg.partition_fact_by_month:
@@ -467,6 +466,8 @@ class Warehouse:
         if self.cfg.partition_fact_by_month:
             writer = writer.partitionBy("year_month")
         writer.parquet(self._path(self.cfg.fact_table))
+        if self.cfg.jdbc_url:
+            self._jdbc_write(df, self.cfg.fact_table, mode)
 
     def compact_fact(self) -> dict:
         """Small-file compaction for the month-partitioned fact table:
